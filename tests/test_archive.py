@@ -11,7 +11,13 @@ import pytest
 from tstore_spark.datagen import attrs_pandas
 from tstore_spark.functions.urls import domain_of
 from tstore_spark.model.tslong import TSLong
-from tstore_spark.sources.archive import apply_retention, open_archive, write_archive
+from tstore_spark.sources.archive import (
+    append_archive,
+    apply_retention,
+    open_archive,
+    read_metadata_all,
+    write_archive,
+)
 
 
 @pytest.fixture(scope="module")
@@ -94,6 +100,70 @@ def test_id_filter_and_partition_pruning(spark, archive_dir, pages_pdf):
     # pruning proof: the physical plan's partition filters mention p_bucket + p_day
     plan = got.df.where("warc_ts >= timestamp'2024-01-03'")._jdf.queryExecution().executedPlan().toString()
     assert "p_bucket" in plan
+
+
+def test_id_filter_scans_only_the_id_bucket(spark, archive_dir, scan_metrics, partition_files):
+    """The scan reads exactly the partition directories of the id's bucket
+    (every day), checked against the files on disk that hold the id."""
+    dom = "d00.example.com"
+    parts = partition_files(os.path.join(archive_dir, "pages"), "domain", dom)
+    buckets = {b for (_day, b), (_n, holds) in parts.items() if holds}
+    assert len(buckets) == 1  # one spec: an id lives in one bucket on every day
+    want = [n for (_day, b), (n, _holds) in parts.items() if b in buckets]
+    assert len(want) < len(parts)
+    got = scan_metrics(open_archive(spark, archive_dir, ids=[dom], with_attributes=False).df)
+    assert got == {"numFiles": sum(want), "numPartitions": len(want)}
+
+
+def test_open_with_ids_submits_no_job(spark, archive_dir, count_jobs, pages_pdf):
+    doms = ["d00.example.com", "d01.example.com"]
+    jobs, got = count_jobs(
+        lambda: open_archive(spark, archive_dir, ids=doms, with_attributes=False)
+    )
+    assert jobs == 0
+    exp = pages_pdf["url"].str.contains("//d00.example.com/|//d01.example.com/").sum()
+    assert got.df.count() == exp
+
+
+def test_open_with_attributes_submits_no_job(spark, archive_dir, count_jobs):
+    jobs, got = count_jobs(lambda: open_archive(spark, archive_dir))
+    assert jobs == 0
+    assert "static_var1" in got.df.columns
+
+
+def test_attributes_without_recorded_schema_still_read(spark, archive_dir, tmp_path):
+    """Metadata written before ``attrs_schema`` existed: the attributes
+    table schema is inferred, and the read matches the recorded one."""
+    import json
+    import shutil
+
+    base = str(tmp_path / "legacy_attrs")
+    shutil.copytree(archive_dir, base)
+    meta_path = os.path.join(base, "tstore_metadata.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["attrs_schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    legacy = open_archive(spark, base).df
+    recorded = open_archive(spark, archive_dir).df
+    assert legacy.schema == recorded.schema
+    assert legacy.count() == recorded.count()
+
+
+def test_append_keeps_attrs_schema(spark, archive_dir, pages_sdf, tmp_path):
+    import shutil
+
+    base = str(tmp_path / "append_attrs")
+    shutil.copytree(archive_dir, base)
+    before = read_metadata_all(base)[2]["attrs_schema"]
+    batch = pages_sdf.limit(10).withColumn("domain", domain_of("url"))
+    append_archive(
+        TSLong.wrap(batch, id_var="domain", time_var="warc_ts",
+                    ts_vars={"content": ["url", "html", "text", "lang"]}),
+        base,
+    )
+    assert read_metadata_all(base)[2]["attrs_schema"] == before
 
 
 def test_column_selection(spark, archive_dir):

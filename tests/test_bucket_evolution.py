@@ -79,6 +79,31 @@ def test_id_filtered_read_exact_across_eras(spark, evolved_archive):
         assert {r["sensor"] for r in got.select("sensor").distinct().collect()} == set(probe)
 
 
+def test_open_evolved_submits_no_job(spark, evolved_archive, count_jobs):
+    base, _ = evolved_archive
+    jobs, got = count_jobs(
+        lambda: open_archive(spark, base, ids=["s3", "s11"], with_attributes=False)
+    )
+    assert jobs == 0
+    assert got.df.count() == 8
+
+
+def test_pruning_scans_the_id_bucket_of_each_era(
+    spark, evolved_archive, scan_metrics, partition_files
+):
+    """Each era's days are scanned only in the bucket the id hashes to
+    under that era's spec, checked against the files that hold the id."""
+    base, _ = evolved_archive
+    parts = partition_files(os.path.join(base, "pages"), "sensor", "s3")
+    era = lambda day: day >= "2024-02-01"  # noqa: E731
+    buckets = {(era(d), b) for (d, b), (_n, holds) in parts.items() if holds}
+    assert len(buckets) == 2  # one bucket per era
+    want = [n for (d, b), (n, _holds) in parts.items() if (era(d), b) in buckets]
+    assert len(want) == 4 < len(parts)
+    got = scan_metrics(open_archive(spark, base, ids=["s3"], with_attributes=False).df)
+    assert got == {"numFiles": sum(want), "numPartitions": len(want)}
+
+
 def test_evolution_guards(spark, tmp_path):
     base = str(tmp_path / "arch2")
     write_archive(_ts(spark, ["a", "b"], ["2024-03-10"]), base,

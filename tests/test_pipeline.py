@@ -1,9 +1,11 @@
 """Resumable pipeline: kill/rerun idempotency via lineage anti-join."""
 
+import os
+
 import pandas as pd
 
 from tstore_spark.operators.rollup import rollup_oracle_pandas
-from tstore_spark.plans.pipeline import read_tier, run_rollup_pipeline
+from tstore_spark.plans.pipeline import TIER_SCHEMA_FILE, TIER_TABLES, read_tier, run_rollup_pipeline
 from pyspark.sql import functions as F
 
 
@@ -65,3 +67,19 @@ def test_pipeline_reprocesses_changed_day(spark, pages_pdf, tmp_path):
     exp = rollup_oracle_pandas(amended, "1d").sort_values(["domain", "window_start"]).reset_index(drop=True)
     got["window_start"] = pd.to_datetime(got["window_start"])
     pd.testing.assert_frame_equal(got[exp.columns], exp, check_dtype=False)
+
+
+def test_read_tier_uses_recorded_schema(spark, pages_pdf, tmp_path, count_jobs):
+    """Each tier write records its schema; reading a tier then submits no
+    job, and the schema equals the one inferred from a tier directory
+    without the file (which must still read)."""
+    base = str(tmp_path / "pipe3")
+    days = sorted(pages_pdf["warc_ts"].dt.date.unique().astype(str))[:2]
+    run_rollup_pipeline(spark, _pages_with_days(spark, pages_pdf, days), base)
+    for tier, table in TIER_TABLES.items():
+        jobs, recorded = count_jobs(lambda: read_tier(spark, base, tier))
+        assert jobs == 0
+        os.remove(os.path.join(base, table, TIER_SCHEMA_FILE))
+        inferred = read_tier(spark, base, tier)
+        assert recorded.schema == inferred.schema
+        assert recorded.count() == inferred.count() > 0

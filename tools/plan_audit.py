@@ -6,6 +6,7 @@ Checks, per representative query:
 - whole-stage codegen present in the aggregation pipeline
 - no CartesianProduct anywhere except the (intentional, broadcast-bounded)
   similarity cross join
+- archive and tier reads submit no Spark job before their action
 
 Usage: python tools/plan_audit.py [sf_dir]   (prints PASS/FAIL per check)
 """
@@ -499,6 +500,42 @@ def main(sf_dir: str) -> int:
     check("sq8.jvm",
           "ArrowEvalPython" not in p and "BatchEvalPython" not in p,
           "codes + integer dots are codegen expressions")
+
+    # 41. archive reads plan without a job of their own: the id buckets fold
+    # to literals in the pages scan's PartitionFilters, and the pages and
+    # tier tables open with their recorded schemas (no inference job)
+    import uuid
+
+    from tstore_spark.datagen import pages_pandas
+    from tstore_spark.plans.pipeline import read_tier, run_rollup_pipeline
+    from tstore_spark.sources.archive import open_archive, write_archive
+
+    def jobs_of(fn):
+        group = f"plan_audit_{uuid.uuid4().hex}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)), out
+
+    with tempfile.TemporaryDirectory(prefix="plan_audit_archive_") as arch:
+        pages = spark.createDataFrame(pages_pandas(rows=500))
+        write_archive(_TSL.wrap(pages, id_var="url", time_var="warc_ts",
+                                ts_vars={"content": ["html", "text", "lang"]}),
+                      arch, num_buckets=4)
+        run_rollup_pipeline(spark, pages, arch)
+        url = pages.first()["url"]
+        n_jobs, tsl = jobs_of(lambda: open_archive(spark, arch, ids=[url]))
+        check("archive.ids_plan_no_job", n_jobs == 0,
+              f"id-filtered open_archive submitted {n_jobs} jobs before its action")
+        part_filters = [ln for ln in plan_of(tsl.df).splitlines() if "PartitionFilters" in ln]
+        check("archive.bucket_partition_filter",
+              any("p_bucket" in ln for ln in part_filters),
+              "id buckets prune partitions at the pages scan")
+        n_jobs, _ = jobs_of(lambda: read_tier(spark, arch, "1m"))
+        check("tier.read_no_job", n_jobs == 0,
+              f"read_tier submitted {n_jobs} jobs before its action")
 
     spark.stop()
     print(f"\n{'ALL PASS' if not failures else 'FAILURES: ' + ', '.join(failures)}")

@@ -17,6 +17,11 @@ Resume protocol:
    three tiers are written with partitionOverwriteMode=dynamic — so a batch
    that died mid-write is simply overwritten on retry, never duplicated.
 4. Lineage is marked per day only after all tier writes commit.
+
+Tier table layout: ``rollup_1m|1h|1d/p_day=D/part-*`` plus ``_tier_schema.json``
+(the tier's ``StructType.json()``, rewritten after each committed write;
+partition discovery skips ``_`` names). :func:`read_tier` passes it to the
+reader, so opening a tier runs no inference job; a tier without it infers.
 """
 
 from __future__ import annotations
@@ -24,14 +29,17 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstore_spark.operators.rollup import rollup_all_tiers
 from tstore_spark.plans.lineage import LineageLog, MetricsLog
+from tstore_spark.sources.archive import schema_reader
 
 TIER_TABLES = {"1m": "rollup_1m", "1h": "rollup_1h", "1d": "rollup_1d"}
+TIER_SCHEMA_FILE = "_tier_schema.json"
 
 
 def day_fingerprints(pages: DataFrame, time_col: str = "warc_ts") -> dict[str, tuple[str, int]]:
@@ -58,6 +66,7 @@ def _write_tier(tier_df: DataFrame, base_dir: str, table: str) -> None:
         .partitionBy("p_day")
         .parquet(path)
     )
+    Path(path, TIER_SCHEMA_FILE).write_text(tier_df.schema.json())
 
 
 def run_rollup_pipeline(
@@ -114,4 +123,7 @@ def run_rollup_pipeline(
 
 
 def read_tier(spark: SparkSession, base_dir: str, tier: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, TIER_TABLES[tier])).drop("p_day")
+    path = os.path.join(base_dir, TIER_TABLES[tier])
+    schema_file = Path(path, TIER_SCHEMA_FILE)
+    schema_json = schema_file.read_text() if schema_file.is_file() else None
+    return schema_reader(spark, schema_json).parquet(path).drop("p_day")

@@ -8,7 +8,7 @@ Reference layout (tstore/archive/io.py:28-48):
 
 Spark-native layout (this module):
 
-    <base_dir>/tstore_metadata.json     # descriptor + bucket count
+    <base_dir>/tstore_metadata.json     # descriptor, bucket specs, fact/attrs schemas
     <base_dir>/attributes/              # dimension table (broadcast at read)
     <base_dir>/pages/p_day=D/p_bucket=B/part-*.parquet
     <base_dir>/rollup_1m|1h|1d/p_day=D/...
@@ -21,6 +21,11 @@ from the logical schema at read — so queries never see them, exactly like
 hidden partitioning. The per-id directory fan-out of the reference (a Python
 loop, tstore/tslong/pandas.py:93-139) becomes a single distributed
 ``repartition(p_day, p_bucket).sortWithinPartitions(time)`` write.
+
+Opening an archive submits no Spark job of its own: an id filter's buckets
+are literal expressions Catalyst folds at planning, and the pages and
+attributes tables are read with the schemas recorded in the metadata (no
+footer-inference job). The query's action is the first job.
 
 Scale notes: one file set per (day, bucket); choose ``num_buckets`` so a
 bucket-day is ~0.5-1 GB at target scale. Sorting within partitions by
@@ -69,7 +74,8 @@ def write_metadata(
     if fact_schema_json is not None:
         meta["fact_schema"] = fact_schema_json
     # carry forward keys owned by other metadata writers (bucket_specs from
-    # evolve_buckets) — an append must never drop an evolution record
+    # evolve_buckets, attrs_schema from write_archive) — an append must
+    # never drop an evolution record
     meta |= extra_meta or {}
     os.makedirs(base_dir, exist_ok=True)
     with open(os.path.join(base_dir, METADATA_FILE), "w") as f:
@@ -221,6 +227,7 @@ def write_archive(
         attrs = df.select(d.id_var, *d.static_vars).dropDuplicates([d.id_var])
     if attrs is not None:
         attrs.coalesce(1).write.mode(mode).parquet(os.path.join(base_dir, ATTRS_DIR))
+    attrs_meta = {"attrs_schema": attrs.schema.json()} if attrs is not None else None
 
     # fact table: hidden-partition emulation; statics live in the dimension only
     fact_cols = [d.id_var, d.time_var, *d.ts_columns]
@@ -241,6 +248,7 @@ def write_archive(
     write_metadata(
         base_dir, d, num_buckets,
         fact_schema_json=fact.drop("p_day", "p_bucket").schema.json(),
+        extra_meta=attrs_meta,
     )
 
 
@@ -330,11 +338,22 @@ def append_archive(
         merged,
         num_buckets,
         fact_schema_json=old_schema.json(),
-        extra_meta={"bucket_specs": meta["bucket_specs"]} if "bucket_specs" in meta else None,
+        extra_meta={k: meta[k] for k in ("bucket_specs", "attrs_schema") if k in meta},
     )
 
 
 # -- read path (reference read lifecycle, SURVEY §3.2) ------------------------
+
+def schema_reader(spark: SparkSession, schema_json: str | None):
+    """Reader with a recorded ``StructType.json()`` schema: no footer-
+    inference job at open. ``None`` (legacy tables) infers as usual."""
+    reader = spark.read
+    if schema_json is not None:
+        from pyspark.sql.types import StructType
+
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader
+
 
 def fact_reader(spark: SparkSession, meta: dict):
     """DataFrameReader honoring the archive's unified ``fact_schema``.
@@ -346,12 +365,7 @@ def fact_reader(spark: SparkSession, meta: dict):
     silently drop those columns from the partitions it replaces. Partition
     columns (p_day/p_bucket) are appended by partition discovery as usual.
     """
-    reader = spark.read
-    if "fact_schema" in meta:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(json.loads(meta["fact_schema"])))
-    return reader
+    return schema_reader(spark, meta.get("fact_schema"))
 
 
 def open_archive(
@@ -400,13 +414,15 @@ def open_archive(
     if ids is not None:
         ids = [str(i) for i in ids]
         df = df.where(F.col(d.id_var).isin(ids))
-        df = df.where(_bucket_prune_predicate(spark, ids, bucket_specs(meta)))
+        df = df.where(_bucket_prune_predicate(ids, bucket_specs(meta)))
 
     df = df.drop("p_day", "p_bucket")  # hidden partitioning: logical schema never sees them
 
     statics: list[str] = []
     if with_attributes and os.path.isdir(os.path.join(base_dir, ATTRS_DIR)):
-        attrs = spark.read.parquet(os.path.join(base_dir, ATTRS_DIR))
+        attrs = schema_reader(spark, meta.get("attrs_schema")).parquet(
+            os.path.join(base_dir, ATTRS_DIR)
+        )
         statics = [c for c in attrs.columns if c != d.id_var]
         df = df.join(F.broadcast(attrs), d.id_var, "left")
 
@@ -417,50 +433,17 @@ def open_archive(
     return wrapped.query(ts_variables=ts_variables, columns=columns) if (ts_variables or columns) else wrapped
 
 
-def _bucket_prune_predicate(
-    spark: SparkSession, ids: list[str], specs: list[tuple[str, int]]
-) -> Column:
-    """Bucket-pruning predicate across evolved specs: for each spec's day
-    range, ``p_bucket ∈ buckets-under-that-spec`` — OR'd over specs, so a
-    query on an archive that rebucketed 8→32 still prunes both eras. One
-    Spark job computes the id buckets under EVERY spec (the _buckets_of
-    single-pass discipline)."""
-    if len(specs) == 1:
-        return F.col("p_bucket").isin(_buckets_of(spark, ids, specs[0][1]))
-    df = spark.createDataFrame([(str(v),) for v in ids], "v string")
-    sel = df.select(
-        *[
-            bucket_column(F.col("v"), n).alias(f"b{i}")
-            for i, (_fd, n) in enumerate(specs)
-        ]
+def _bucket_prune_predicate(ids: list[str], specs: list[tuple[str, int]]) -> Column:
+    """Bucket-pruning predicate across evolved specs: ``p_bucket IN
+    (bucket of each id under the spec owning p_day)``. Every operand is a
+    literal or ``p_day``, so Catalyst folds the hash at planning (one spec:
+    ``pmod(xxhash64('u1'), 8)`` becomes a literal) and the file index
+    evaluates the per-day CASE chain of evolved specs per partition —
+    an archive that rebucketed 8→32 prunes both eras and no Spark job
+    runs before the query's own action."""
+    return F.col("p_bucket").isin(
+        [bucket_expr_for_specs(F.lit(i), "p_day", specs) for i in ids]
     )
-    rows = sel.collect()
-    pred = None
-    for i, (from_day, _n) in enumerate(specs):
-        buckets = sorted({int(r[f"b{i}"]) for r in rows})
-        seg = F.col("p_bucket").isin(buckets)
-        seg = seg & (F.col("p_day") >= F.lit(from_day).cast("date"))
-        if i + 1 < len(specs):
-            seg = seg & (F.col("p_day") < F.lit(specs[i + 1][0]).cast("date"))
-        pred = seg if pred is None else (pred | seg)
-    return pred
-
-
-def _buckets_of(spark: SparkSession, values: list[str], num_buckets: int) -> list[int]:
-    """Evaluate the bucket transform for ALL filter ids in ONE Spark job.
-
-    A per-id ``spark.range(1)...head()`` loop costs one driver-blocking job
-    per id — seconds of pure scheduling overhead before the real scan when a
-    query filters on hundreds of ids. One local-relation select computes
-    every bucket in a single pass."""
-    df = spark.createDataFrame([(str(v),) for v in values], "v string")
-    rows = df.select(bucket_column(F.col("v"), num_buckets).alias("b")).collect()
-    return sorted({int(r["b"]) for r in rows})
-
-
-def _bucket_of(spark: SparkSession, value: str, num_buckets: int) -> int:
-    """Driver-side evaluation of the bucket transform for one id."""
-    return _buckets_of(spark, [value], num_buckets)[0]
 
 
 # -- retention (north rule: per-tier expiry) ----------------------------------
